@@ -111,13 +111,7 @@ object Bench {
         // clearCache — count them into the artifact, then drop them so no
         // query pays for a predecessor's leftovers
         val nRdds = spark.sparkContext.getPersistentRDDs.size
-        spark.catalog.clearCache() // queries are independent; drop leftovers
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        // staged temp-parquet dirs live until JVM exit otherwise; a
-        // 229-query session accumulates dozens (disk + page-cache pressure
-        // — the r11 bench-tail amplification: s10b 28.6s in-catalog vs
-        // ~12s isolated). Queries are independent — delete them NOW.
-        graft.ext.Dedup.drainStageDirs()
+        graft.stage.Stage.release(spark) // queries are independent
         // force a driver GC BETWEEN queries/reps (outside the timed
         // region): ContextCleaner only reclaims broadcasts/shuffle files
         // after a driver GC notices the references are dead — the 15s

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.{Aggs, Filters, Joins, Merge, Projections, Windows}
 import graft.ext.{Curation, Dedup, Similarity, TextStats, Unigram}
+import graft.stage.Stage
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -277,7 +278,7 @@ object SparkEntry {
         (datediff(col("o_orderdate").cast("date"),
           to_date(lit("1992-01-01"))) % 64).as("dk"),
         col("o_totalprice"))
-      val zdir = graft.ops.Scale.tempLayoutDir("graft_zq_")
+      val zdir = Stage.tempDir("graft_zq_")
       graft.ops.Scale.writeZOrdered(o, zdir, "ck", "dk", 16)
       graft.ops.Scale.prunedRead2(s, zdir, "ck", 8, 23, "dk", 8, 23)
         .groupBy(col("ck"))
@@ -773,7 +774,7 @@ object SparkEntry {
       // its own signatures and band-joins against the stage — corpus text
       // never rescanned, new-side bands broadcast (PlanSpec pins it).
       val d = t(s, dir, "documents")
-      val stage = Dedup.stageSignatures(
+      val stage = Stage.write(
         Dedup.minhashSignature(d.filter(col("doc_id") % 5 =!= 0), "text", 4))
       Dedup.lshCandidatePairsIncremental(
         Dedup.minhashSignature(d.filter(col("doc_id") % 5 === 0), "text", 4),
@@ -1010,7 +1011,7 @@ object SparkEntry {
       val a = e.filter(col("vec_id") % 2 === 0)
       val base = e.filter(pmod(col("vec_id"), lit(4L)) === 1)
       val batch = e.filter(pmod(col("vec_id"), lit(4L)) === 3)
-      val staged = Dedup.stageAndRead(
+      val staged = Stage.writeAndRead(
         Similarity.centroidSums(base, Seq("label"), "embedding"))
       Similarity.centroidDriftFromSums(
         Similarity.centroidSums(a, Seq("label"), "embedding"),
@@ -1149,7 +1150,7 @@ object SparkEntry {
       val cb = Similarity.ivfPqCodebook(res, "vec_id", 4, 16, 64)
       val enc = Similarity.pqEncodeResiduals(res, "resid", cb)
         .select(col("vec_id").as("n_id"), col("cid"), col("codes"))
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivfpq_")
+      val ldir = Stage.tempDir("graft_ivfpq_")
       Similarity.writeIvfPqPartitioned(enc, ldir)
       Similarity.ivfPqTopKPartitioned(ldir, cents,
           emb.filter(col("vec_id") < 4), "vec_id", "embedding", cb, 5, 2)
@@ -1178,7 +1179,7 @@ object SparkEntry {
             Similarity.ivfResiduals(batch, cents, "vec_id", "embedding"),
             "resid", cb)
           .select(col("vec_id").as("n_id"), col("cid"), col("codes"))
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivfpq_append_")
+      val ldir = Stage.tempDir("graft_ivfpq_append_")
       Similarity.writeIvfPqPartitioned(enc(base), ldir)
       Similarity.appendIvfPqPartitioned(
         enc(emb.filter(col("vec_id") >= 16 && col("vec_id") % 5 === 0)), ldir)
@@ -1331,7 +1332,7 @@ object SparkEntry {
       val assigned = Similarity.ivfAssignJoin(
         emb.select(col("vec_id"), col("embedding")), centroids,
         "vec_id", "embedding")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivf_layout_")
+      val ldir = Stage.tempDir("graft_ivf_layout_")
       Similarity.writeIvfPartitioned(assigned, ldir)
       Similarity.ivfTopKPartitioned(ldir, centroids,
           emb.filter(col("vec_id") < 8), "vec_id", "embedding", 5, 2)
@@ -1372,10 +1373,10 @@ object SparkEntry {
       // corpus-scale curation regexes ran 3× per run. Each stages ONCE
       // to a temp parquet (same rows, same columns — the oracle hash
       // pins identity) and every head reads the flat stage.
-      val curated = Dedup.stageAndRead(d.join(ok, "doc_id"))
+      val curated = Stage.writeAndRead(d.join(ok, "doc_id"))
       val clusters = Dedup.dupClusters(Dedup.lshCandidateStarPairsStaged(
         Dedup.minhashSignature(curated, "text", 4), "doc_id", 4, 2))
-      val train = Dedup.stageAndRead(
+      val train = Stage.writeAndRead(
         Dedup.applyDedup(curated, clusters, "doc_id")
           .filter(col("doc_id") >= 10)) // ids < 10 are the benchmark split
       val contaminated = Dedup.contaminatedDocs(train,
@@ -1647,7 +1648,7 @@ object SparkEntry {
       // The oracle is the PARITY CONTRACT itself: one-shot stats over all
       // docs restricted to the batch ids must be bit-identical.
       val d = t(s, dir, "documents")
-      val stage = Dedup.stageSignatures(
+      val stage = Stage.write(
         Dedup.spanHashes(d.filter(col("doc_id") % 5 =!= 0), "text", "doc_id", 5))
       Dedup.repeatedSpanStatsIncremental(
         d.filter(col("doc_id") % 5 === 0), stage, "text", "doc_id", 5)
@@ -1680,7 +1681,7 @@ object SparkEntry {
       val d = t(s, dir, "documents")
       val batch = d.filter(pmod(col("doc_id"), lit(5)) === 0)
       val corpus = d.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val stage = graft.ext.Dedup.stageSignatures(
+      val stage = Stage.write(
         graft.ext.Dedup.spanHashes(corpus, "text", "doc_id", 5))
       graft.ext.Dedup.sharedSpansExactIncremental(batch, corpus, stage,
         "text", "doc_id", 5)
@@ -1944,7 +1945,7 @@ object SparkEntry {
       // the per-batch stats rows — and must be bit-identical to the
       // one-shot x43 over the full corpus: the oracle is x43's, verbatim.
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_bm25_inc_")
+      val ldir = Stage.tempDir("graft_bm25_inc_")
       Seq(0, 1).foreach { par =>
         graft.ext.Retrieval.appendIndexBatch(
           d.filter(pmod(col("doc_id"), lit(2)) === par), "text", "doc_id", ldir)
@@ -1962,7 +1963,7 @@ object SparkEntry {
       // x43's oracle VERBATIM — compaction must be invisible to results,
       // and the ScaleSpec pins the file counts.
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_bm25_cmp_")
+      val ldir = Stage.tempDir("graft_bm25_cmp_")
       Seq(0, 1, 2).foreach { par =>
         graft.ext.Retrieval.appendIndexBatch(
           d.filter(pmod(col("doc_id"), lit(3)) === par), "text", "doc_id", ldir)
@@ -1981,7 +1982,7 @@ object SparkEntry {
       // corpus-side join at all. Pruning must be invisible to the
       // RESULT: the oracle is x43's, verbatim.
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_bm25_index_")
+      val ldir = Stage.tempDir("graft_bm25_index_")
       graft.ext.Retrieval.writeIndex(d, "text", "doc_id", ldir)
       graft.ext.Retrieval.bm25TopKIndexed(ldir,
         hybridQueries, 5)
@@ -2079,7 +2080,7 @@ object SparkEntry {
         TextStats.tokenCount(col("text")).cast("long").as("n_tok"))
       val assigned = graft.ext.Curation.assignShards(
         weighted, "doc_id", "n_tok", 8, 64L)
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_shards_")
+      val ldir = Stage.tempDir("graft_shards_")
       assigned.write.partitionBy("shard").mode("overwrite").parquet(ldir)
       // explicit schema: a zero-survivor layout has no data files to
       // infer from, and must read back as empty, not throw
@@ -2169,7 +2170,7 @@ object SparkEntry {
           TextStats.tokenCount(col("text")).cast("long").as("n_tok"))
       val assigned = graft.ext.Curation.assignShards(
         survivors, "doc_id", "n_tok", 8, 64L)
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_release_")
+      val ldir = Stage.tempDir("graft_release_")
       assigned.write.partitionBy("shard").mode("overwrite").parquet(ldir)
       s.read.schema(assigned.schema).parquet(ldir)
         .groupBy(col("shard").cast("long").as("shard"), col("lang"))
@@ -2212,7 +2213,7 @@ object SparkEntry {
       // Cross-batch duplicate texts still mark exactly (they collide on
       // the content digest whichever batch they arrived in).
       val d = t(s, dir, "documents")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_card_inc_")
+      val ldir = Stage.tempDir("graft_card_inc_")
       Seq(0, 1).foreach { par =>
         graft.ext.Curation.appendCardBatch(
           d.filter(pmod(col("doc_id"), lit(2)) === par), "text",
@@ -3052,7 +3053,7 @@ object SparkEntry {
       // hot-band cap censuses the combined corpus. Oracle = the one-shot
       // x62 replay restricted to pairs touching the batch.
       val d = t(s, dir, "documents")
-      val stage = Dedup.stageSignatures(Dedup.chunkSignatures(
+      val stage = Stage.write(Dedup.chunkSignatures(
         d.filter(col("doc_id") % 5 =!= 0), "text", "doc_id", 120, 4))
       Dedup.chunkNearDupPairsIncremental(d.filter(col("doc_id") % 5 === 0),
           stage, "text", "doc_id", 120, 4, 2, maxBandChunks = 50)
@@ -3087,7 +3088,7 @@ object SparkEntry {
       // stage the ONE-directional host pairs, then symmetrize off the
       // staged parquet — a union over the raw frame would re-execute the
       // whole chunk-LSH lineage once per direction
-      val sp = Dedup.stageAndRead(e0.select(col("a_h"), col("b_h")))
+      val sp = Stage.writeAndRead(e0.select(col("a_h"), col("b_h")))
       val edges = sp.select(col("a_h").as("src"), col("b_h").as("dst"))
         .union(sp.select(col("b_h").as("src"), col("a_h").as("dst")))
       // lazy rounds here: with the copy graph staged flat, the 2^3 rank
@@ -3429,10 +3430,10 @@ object SparkEntry {
           when(col("n_chars") >= 256, "long").otherwise("short").as("rb"),
           when(expr("length(text) - length(replace(text, ' ', ''))") >= 39,
             "long").otherwise("short").as("rc"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage.writeAndRead(
         graft.ext.Learn.fleissCells(
           lab.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), Seq("ra", "rb", "rc"))))
+          Seq("lang"), Seq("ra", "rb", "rc")))
       val batch = graft.ext.Learn.fleissCells(
         lab.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), Seq("ra", "rb", "rc"))
@@ -3518,10 +3519,10 @@ object SparkEntry {
       // oracle VERBATIM without rescanning the base (x98b convention).
       val d = t(s, dir, "documents")
         .withColumn("len_bucket", expr("n_chars div 256"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage.writeAndRead(
         graft.ext.Curation.qiGroupCounts(
           d.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), Seq("source", "len_bucket"))))
+          Seq("lang"), Seq("source", "len_bucket")))
       val batch = graft.ext.Curation.qiGroupCounts(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), Seq("source", "len_bucket"))
@@ -3555,9 +3556,9 @@ object SparkEntry {
       // and this answers x100b's oracle VERBATIM (x100d convention).
       val d = x100bFrame(s, dir)
       val keys = Seq("lang"); val qis = Seq("source", "len_bucket")
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage.writeAndRead(
         graft.ext.Curation.lDiversityCells(
-          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv")))
+          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv"))
       val batch = graft.ext.Curation.lDiversityCells(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0), keys, qis, "sv")
       graft.ext.Curation.lDiversityFromCells(
@@ -3571,9 +3572,9 @@ object SparkEntry {
       // rescanning the base split.
       val d = x100bFrame(s, dir)
       val keys = Seq("lang"); val qis = Seq("source", "len_bucket")
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage.writeAndRead(
         graft.ext.Curation.tClosenessCells(
-          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv")))
+          d.filter(pmod(col("doc_id"), lit(4L)) =!= 0), keys, qis, "sv"))
       val batch = graft.ext.Curation.tClosenessCells(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0), keys, qis, "sv")
       graft.ext.Curation.tClosenessFromCells(
@@ -3591,10 +3592,10 @@ object SparkEntry {
         .select(col("doc_id"), col("lang"), col("source"),
           when(size(split(graft.ext.TextStats.wsTrim(col("text")),
             "\\s+")) >= 40, "long").otherwise("short").as("lenlab"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage.writeAndRead(
         graft.ext.Learn.chiSquareCells(
           lab.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), "source", "lenlab")))
+          Seq("lang"), "source", "lenlab"))
       val batch = graft.ext.Learn.chiSquareCells(
         lab.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), "source", "lenlab")
@@ -3615,10 +3616,10 @@ object SparkEntry {
           when(size(split(graft.ext.TextStats.wsTrim(col("text")),
             "\\s+")) >= 40, "long").otherwise("short").as("ra"),
           when(col("n_chars") >= 256, "long").otherwise("short").as("rb"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage.writeAndRead(
         graft.ext.Learn.confusionCells(
           lab.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), "ra", "rb")))
+          Seq("lang"), "ra", "rb"))
       val batch = graft.ext.Learn.confusionCells(
         lab.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), "ra", "rb")
@@ -3678,10 +3679,10 @@ object SparkEntry {
           col("n_chars"))
         .select(col("doc_id"), col("lang"), expr("_tc div 8").as("xb"),
           expr("n_chars div 64").as("yb"))
-      val staged = s.read.parquet(graft.ext.Dedup.stageSignatures(
+      val staged = Stage.writeAndRead(
         graft.ext.Learn.kendallCells(
           d.filter(pmod(col("doc_id"), lit(4L)) =!= 0),
-          Seq("lang"), "xb", "yb")))
+          Seq("lang"), "xb", "yb"))
       val batch = graft.ext.Learn.kendallCells(
         d.filter(pmod(col("doc_id"), lit(4L)) === 0),
         Seq("lang"), "xb", "yb")
@@ -3991,7 +3992,7 @@ object SparkEntry {
       // narrow parquet and pays only its own merge chain. Same move as
       // the r16 WordPiece/Unigram staged-word-table fix; merges are
       // bit-identical (the staged frame IS the round-0 corpus).
-      val charified = graft.ext.Dedup.stageAndRead(
+      val charified = Stage.writeAndRead(
         t(s, dir, "documents").select(
           graft.ext.TextStats.charify(col("text")).as("ctext")))
       val merges = graft.ext.TextStats.bpeTrain(charified, "ctext", 3)
@@ -4013,7 +4014,7 @@ object SparkEntry {
       def assign(batch: org.apache.spark.sql.DataFrame) =
         Similarity.ivfAssignJoin(batch.select(col("vec_id"), col("embedding")),
           centroids, "vec_id", "embedding")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivf_append_")
+      val ldir = Stage.tempDir("graft_ivf_append_")
       Similarity.writeIvfPartitioned(
         assign(emb.filter(col("vec_id") % 5 =!= 0)), ldir)
       Similarity.appendIvfPartitioned(
@@ -4039,7 +4040,7 @@ object SparkEntry {
       def assign(batch: org.apache.spark.sql.DataFrame) =
         Similarity.ivfAssignJoin(batch.select(col("vec_id"), col("embedding")),
           centroids, "vec_id", "embedding")
-      val ldir = graft.ops.Scale.tempLayoutDir("graft_ivf_compact_")
+      val ldir = Stage.tempDir("graft_ivf_compact_")
       Similarity.writeIvfPartitioned(
         assign(emb.filter(col("vec_id") % 5 > 1)), ldir)
       Similarity.appendIvfPartitioned(

@@ -65,15 +65,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      spark.catalog.clearCache() // queries are independent
-      // operator-managed RDD caches (e.g. dupClusters' final round) are
-      // invisible to clearCache — drop them between queries too
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // staged temp-parquet dirs (signature stages, sketch bases, IVF
-      // layouts) otherwise accumulate until JVM exit: dozens of dirs of
-      // page-cache + disk pressure by the late catalog (r11 bench-tail
-      // amplification). Queries are independent — drop them now.
-      graft.ext.Dedup.drainStageDirs()
+      graft.stage.Stage.release(spark) // queries are independent
     }
     spark.stop()
   }

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.stage.Stage
 
 /** Staged all-pairs prefix index ([[Dedup.allPairsIndex]]): the base
   * corpus's prefixes (a_id, tok, _ap_n), element sets (_ap_id, toks),
@@ -132,13 +133,9 @@ object Dedup {
     * lshCandidatePairsStaged move for CC feeds): one signature pass,
     * star edges per band bucket. */
   def lshCandidateStarPairsStaged(sig: DataFrame, idCol: String, k: Int,
-                                  rowsPerBand: Int): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_stage_")
-    registerStageDirForCleanup(dir.toString)
-    sig.write.mode("overwrite").parquet(dir.toString)
-    lshCandidateStarPairs(sig.sparkSession.read.parquet(dir.toString),
+                                  rowsPerBand: Int): DataFrame =
+    lshCandidateStarPairs(Stage.writeAndRead(sig),
       idCol, k, rowsPerBand)
-  }
 
   /** At-scale LSH candidate generation: materialize the signature table to
     * parquet FIRST, then band/self-join from the staged table — exactly ONE
@@ -161,15 +158,12 @@ object Dedup {
   }
 
   /** [[lshCandidatePairsStaged]] with a unique per-invocation staging
-    * directory (no cross-session overwrite races on a shared path). The
-    * dir is registered for recursive deletion at JVM exit, so repeated
-    * bench/verify runs don't accumulate parquet stages in /tmp. */
+    * directory (no cross-session overwrite races on a shared path),
+    * deleted by [[graft.stage.Stage.drain]] or at JVM exit. */
   def lshCandidatePairsStaged(sig: DataFrame, idCol: String, k: Int,
-                              rowsPerBand: Int): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_stage_")
-    registerStageDirForCleanup(dir.toString)
-    lshCandidatePairsStaged(sig, idCol, k, rowsPerBand, dir.toString)
-  }
+                              rowsPerBand: Int): DataFrame =
+    lshCandidatePairsStaged(sig, idCol, k, rowsPerBand,
+      Stage.tempDir("graft_sig_stage_"))
 
   /** Chunk-level (partial-overlap) near-dup detection — what whole-doc
     * MinHash structurally misses: two docs sharing one long identical
@@ -221,8 +215,8 @@ object Dedup {
     * [[chunkNearDupPairsIncremental]] band from: one row per
     * `chunkChars`-character window, keyed by a `_ck = (id, cidx)` struct.
     * This is the table a production flow STAGES (parquet, appended batch
-    * by batch — the [[stageSignatures]] contract) so corpus text is never
-    * rescanned. */
+    * by batch — the [[graft.stage.Stage.write]] contract) so corpus text
+    * is never rescanned. */
   def chunkSignatures(df: DataFrame, textCol: String, idCol: String,
                       chunkChars: Int, k: Int,
                       shingleLen: Int = 5): DataFrame = {
@@ -304,39 +298,10 @@ object Dedup {
     chunkHitCount(hits, minChunkHits)
   }
 
-  /** Write a signature table to a unique temp parquet stage (registered
-    * for JVM-exit deletion) and return its path — the setup step for
-    * [[lshCandidatePairsIncremental]] and tests of the staged flow. In
-    * production the stage is a durable table the pipeline owns, appended
-    * batch by batch — and for streaming ingest, appended per-batch-subdir
-    * with overwrite so a crash-replayed micro-batch can't double its
-    * signatures (the `Curation.appendCardBatch(…, overwrite = true)`
-    * discipline, EventStreamsSpec). */
-  def stageSignatures(sig: DataFrame): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sig_stage_")
-    registerStageDirForCleanup(dir.toString)
-    sig.write.mode("overwrite").parquet(dir.toString)
-    dir.toString
-  }
-
-  /** [[stageSignatures]] + read-back in one step, supplying the KNOWN
-    * schema to the reader: `spark.read.parquet(stage)` re-infers the
-    * schema it wrote a millisecond earlier — a footer-read job per stage
-    * call, pure overhead the engine pays dozens of times per catalog run
-    * (every staged round/census/skeleton). The schema is exact by
-    * construction (we wrote this exact frame), so the read is
-    * bit-identical; only the inference job disappears. */
-  def stageAndRead(df: DataFrame): DataFrame =
-    // asNullable: parquet round-trips every field as nullable, so the
-    // supplied schema must match what inference would have produced
-    df.sparkSession.read
-      .schema(org.apache.spark.sql.graftbridge.Bridge.asNullable(df.schema))
-      .parquet(stageSignatures(df))
-
   /** Incremental batch dedup — the production flow for a GROWING corpus:
     * signatures of everything already ingested live in a parquet stage
     * (one narrow (id, k hashes) table, written once per batch, e.g. via
-    * [[stageSignatures]]/append); a new batch computes only ITS OWN
+    * [[graft.stage.Stage.write]]/append); a new batch computes only ITS OWN
     * signatures and band-joins against the stage. Returns candidate pairs
     * with at least one side in the new batch, `a_id < b_id`.
     *
@@ -365,53 +330,9 @@ object Dedup {
       .distinct()
   }
 
-  /** Staging dirs pending JVM-exit deletion (exposed for specs). */
-  def registeredStageDirs: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    stageDirs.asScala.toSet
-  }
-
-  private val stageDirs = java.util.Collections.newSetFromMap(
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
-
-  // one hook for all registered dirs, installed on first use
-  private lazy val installStageCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      stageDirs.forEach { d =>
-        val p = java.nio.file.Paths.get(d)
-        if (java.nio.file.Files.exists(p)) {
-          java.nio.file.Files.walk(p)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(f => java.nio.file.Files.deleteIfExists(f))
-        }
-      }
-    }))
-
-  private[graft] def registerStageDirForCleanup(dir: String): Unit = {
-    installStageCleanupHook
-    stageDirs.add(dir)
-  }
-
-  /** Delete every registered staging dir NOW and clear the registry —
-    * the inter-query hygiene hook for long catalog sessions (Bench,
-    * Verify). The JVM-exit hook alone let a 229-query session accumulate
-    * dozens of temp parquet stages (disk + page-cache pressure measured
-    * as up-to-17× bench-tail inflation in round 11). Safe between
-    * independent queries: a stage is only read by the query that created
-    * it, and that query has completed its action before the drain. */
-  def drainStageDirs(): Unit = {
-    val it = stageDirs.iterator()
-    while (it.hasNext) {
-      val d = it.next()
-      it.remove()
-      val p = java.nio.file.Paths.get(d)
-      if (java.nio.file.Files.exists(p)) {
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      }
-    }
-  }
+  /** [[graft.stage.Stage.drain]], kept under its historical name for
+    * callers outside this module. */
+  def drainStageDirs(): Unit = Stage.drain()
 
   /** MinHash signature via the native single-pass codegen expression
     * (graft.functions.MinHashSignature) — the fast engine-internal path:
@@ -777,7 +698,7 @@ object Dedup {
     * (gram, id) pairs, never document text; output is one row per
     * contaminated train doc. The standard pretrain decontamination pass. */
   /** `bloomPreFilter` — opt-in bloom probe ahead of the broadcast join.
-    * MEASURED at bench scale (tools/X23Bench, sf0.1, interleaved warm
+    * MEASURED at bench scale (PERF.md "x23 bloom pre-filter", sf0.1, interleaved warm
     * runs): a wash to slightly negative (~7.1 s vs ~6.7-7.2 s) — the
     * eval-gram hash map is tiny and cache-resident, so the BHJ probe a
     * negative gram pays is already as cheap as the bloom probe. The knob
@@ -1283,7 +1204,7 @@ object Dedup {
 
   /** Incremental [[repeatedSpanStats]] for a GROWING corpus (the x26
     * contract): span digests of everything already ingested live in a
-    * parquet stage — (id, pos, h) rows written via [[stageSignatures]]/
+    * parquet stage — (id, pos, h) rows written via [[graft.stage.Stage.write]]/
     * append — and a NEW batch's per-doc stats count occurrences across
     * corpus ∪ batch while only the batch pays a text pass.
     *
@@ -1463,7 +1384,7 @@ object Dedup {
     val pref0 = apPrefix(tk, cnt, tNum, tDen)
     val prefS =
       if (maxTokenOcc >= Long.MaxValue / 2) pref0
-      else stageAndRead(pref0)
+      else Stage.writeAndRead(pref0)
     val pref = apOccGate(prefS, maxTokenOcc)
     val cand = pref
       .join(pref.select(col("a_id").as("b_id"), col("tok"),
@@ -1631,7 +1552,7 @@ object Dedup {
     * the base's prefixes, element sets, and — the piece that makes the
     * index reusable — its element-frequency table, FROZEN as the global
     * prefix order. Each table stages to parquet (unique temp dirs,
-    * JVM-exit cleanup, the stageSignatures contract), so later batches
+    * JVM-exit cleanup, the [[graft.stage.Stage]] contract), so later batches
     * never rescan the base corpus. */
   def allPairsIndex(base: DataFrame, idCol: String, setCol: String,
                     tNum: Int, tDen: Int,
@@ -1643,9 +1564,9 @@ object Dedup {
     // derive from it, and without the stage each would re-run the
     // caller's set projection (often a shingle explode) over the whole
     // base corpus — one text pass instead of three
-    val tk = stageAndRead(apTokens(base, idCol, setCol))
+    val tk = Stage.writeAndRead(apTokens(base, idCol, setCol))
     val cnt = tk.groupBy(col("tok")).agg(count(lit(1)).as("_ap_c"))
-    val cntS = stageAndRead(cnt)
+    val cntS = Stage.writeAndRead(cnt)
     // prefix and sets both derive from the ALREADY-STAGED tk + counts —
     // stage them CONCURRENTLY (two driver threads, two Spark jobs)
     // instead of two sequential write+read commit round-trips; both
@@ -1656,7 +1577,7 @@ object Dedup {
     // narrow census: one agg over the ALREADY-STAGED prefixes + a
     // token-sized stage write, paid once at indexing time
     val occ = if (censusInIndex)
-      Some(stageAndRead(
+      Some(Stage.writeAndRead(
         prefix.groupBy(col("tok")).agg(count(lit(1)).as("_ap_occ"))))
     else None
     AllPairsIndex(prefix, sets, cntS, occ)
@@ -1669,9 +1590,9 @@ object Dedup {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    // stageAndRead inside the future: the read-back frame carries the
+    // Stage.writeAndRead inside the future: the read-back frame carries the
     // writer's known schema, so no footer-inference job ever runs
-    val fs = Seq(Future(stageAndRead(a)), Future(stageAndRead(b)))
+    val fs = Seq(Future(Stage.writeAndRead(a)), Future(Stage.writeAndRead(b)))
     val settled = fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     settled.collectFirst { case scala.util.Failure(e) => throw e }
     (settled(0).get, settled(1).get)
@@ -1707,7 +1628,7 @@ object Dedup {
     // census (token-sized stage write — delta-vocabulary cost, not
     // corpus cost)
     val occ = index.occ.map { o =>
-      stageAndRead(
+      Stage.writeAndRead(
         o.select(col("tok"), col("_ap_occ"))
           .unionByName(bPrefix.groupBy(col("tok"))
             .agg(count(lit(1)).as("_ap_occ")))
@@ -1763,7 +1684,7 @@ object Dedup {
     val bpref0 = apPrefix(tk, index.counts, tNum, tDen)
     val bprefS =
       if (maxTokenOcc >= Long.MaxValue / 2) bpref0
-      else stageAndRead(bpref0)
+      else Stage.writeAndRead(bpref0)
     val bpref = index.occ match {
       case Some(o) => apOccGateCounted(bprefS, maxTokenOcc, o)
       case None => apOccGate(bprefS, maxTokenOcc, occExtra = Some(index.prefix))

@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.stage.Stage
 
 /** Link-graph centrality for web-scale corpus curation.
   *
@@ -15,60 +16,6 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  private val edgeTableId = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  // Staged edge tables are named graft_pr_edges_<pid>_<hex>_<n>: the
-  // per-JVM counter alone is NOT globally unique — two concurrent
-  // drivers sharing one warehouse dir (or a crashed run's leftover
-  // racing a live successor) would collide on graft_pr_edges_1 and
-  // writeBucketed's DROP+delete would destroy the other run's live
-  // edge table mid-iteration. The pid makes names unique across live
-  // processes AND lets the sweep below prove an owner dead; the random
-  // hex covers pid reuse across reboots.
-  private val sessionToken: String = {
-    val pid = ProcessHandle.current().pid()
-    val hex = java.util.UUID.randomUUID().toString.take(8)
-    s"${pid}_$hex"
-  }
-
-  private val ownerPid = raw"graft_pr_edges_(\d+)_.*".r
-
-  /** One-time (per JVM) reclaim of staged edge tables leaked by CRASHED
-    * runs — the drop handle runs in `finally`, but kill -9 between
-    * writeBucketed and the drop leaves the managed table + warehouse
-    * directory behind, and UUID-unique names mean no later run ever
-    * reclaims them by name collision. Mirrors drainStageDirs' hygiene
-    * contract for stage dirs: delete only what is provably garbage — a
-    * dir whose embedded owner pid no longer exists (/proc/<pid> gone).
-    * A LIVE concurrent driver's tables keep their pid alive and are
-    * never touched. Legacy counter-only names (graft_pr_edges_<n>) are
-    * not matched: ownership is unprovable, and current code never
-    * creates them again. */
-  private lazy val sweepDeadOwnerTables: Unit = {
-    try {
-      val spark = org.apache.spark.sql.SparkSession.active
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      val root =
-        if (warehouse.startsWith("file:"))
-          new java.io.File(new java.net.URI(warehouse))
-        else new java.io.File(warehouse)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      Option(root.listFiles()).foreach(_.foreach { d =>
-        d.getName match {
-          case ownerPid(pid)
-              if !java.nio.file.Files.exists(
-                java.nio.file.Paths.get(s"/proc/$pid")) =>
-            spark.sql(s"DROP TABLE IF EXISTS `${d.getName}`")
-            rm(d)
-          case _ => ()
-        }
-      })
-    } catch { case _: Throwable => () } // hygiene must never fail a run
-  }
-
   /** Stage the edge table for a staged-round rank loop — MATERIALIZED
     * (a lazy lineage would re-run the caller's whole edge build every
     * round — measured 3× on x59c's join-built graph) and BUCKETED on
@@ -81,8 +28,8 @@ object Graphs {
     * Buckets = the session's shuffle parallelism. Returns the staged
     * frame plus a drop handle the loop invokes AFTER its final rank
     * stage materializes (the managed table is round-lifetime state, not
-    * output lineage; an exception mid-loop leaks the table until the
-    * next same-name writeBucketed reclaims it — the staged-dir
+    * output lineage; a crashed run's table is reclaimed by
+    * [[graft.stage.Stage.ownedTable]]'s dead-owner sweep — the staged-dir
     * JVM-exit contract does not cover catalog tables). */
   private[ext] def stageEdgesBucketed(e0: DataFrame): (DataFrame, () => Unit) =
     stageEdgesBucketedOn(e0, "_pr_src")
@@ -100,8 +47,7 @@ object Graphs {
   private def stageProjectedEdges(e0: DataFrame, key: String,
                                   weighted: Boolean = false): EdgeStage = {
     val spark = e0.sparkSession
-    sweepDeadOwnerTables
-    val tbl = s"graft_pr_edges_${sessionToken}_${edgeTableId.incrementAndGet()}"
+    val tbl = Stage.ownedTable(spark)
     val buckets =
       math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
     graft.ops.Scale.writeBucketed(e0, tbl, key, buckets)
@@ -143,17 +89,6 @@ object Graphs {
     skeletonRows(e, weighted)
       .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))
 
-  /** Diagnostic accessor for the plan-evidence tooling
-    * ([[graft.tools.SkeletonPlan]]): the skeleton frame of a (src, dst)
-    * edge list, exactly as every ranker round (and every EdgeStage
-    * init/append merge) builds it. NOT engine surface — the final
-    * staged-query explain cannot show this intra-operator plan (the r17
-    * verdict's evidence gap), so the tool dumps it directly. */
-  private[graft] def skeletonDiag(edges: DataFrame, srcCol: String,
-                                  dstCol: String): DataFrame =
-    skeletonOf(edges.select(col(srcCol).cast("long").as("_pr_src"),
-      col(dstCol).cast("long").as("_pr_dst")), weighted = false)
-
   /** A staged, bucketed, APPENDABLE edge table — the cross-call form of
     * [[stageEdgesBucketed]] for the per-crawl cadence: stage the
     * resident graph ONCE, [[EdgeStage.append]] each crawl's delta (a
@@ -185,39 +120,31 @@ object Graphs {
     // one full-corpus nodes-distinct + degree agg per crawl).
     private var skel: Option[DataFrame] = None
     private[ext] def initSkeleton(): Unit =
-      skel = Some(Dedup.stageAndRead(skeletonOf(edges, weighted)))
+      skel = Some(Stage.writeAndRead(skeletonOf(edges, weighted)))
     /** The staged skeleton frame (node, _pr_od) when maintained; rankers
       * fall back to deriving it from the edge table when absent. */
     private[ext] def skeletonOpt: Option[DataFrame] = skel
 
-    // data files currently under the managed table's directory (the
-    // single-writer contract every append-only stage here carries makes
-    // a before/after diff of this listing exactly the appended delta).
-    // RECURSIVE: a future partitioned/subdirectory layout must not make
-    // the diff silently miss delta files and corrupt the skeleton — the
-    // walk finds them wherever the writer puts them.
-    private def dataFiles(): Set[String] = {
-      val loc = new org.apache.hadoop.fs.Path(
-        org.apache.spark.sql.graftbridge.Bridge.tableLocation(spark, table))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = Set.newBuilder[String]
-      val it = fs.listFiles(loc, /* recursive = */ true)
-      while (it.hasNext) {
-        val st = it.next()
-        val name = st.getPath.getName
-        if (st.isFile && !name.startsWith("_") && !name.startsWith("."))
-          out += st.getPath.toString
-      }
-      out.result()
-    }
-
     private def appendRows(d: DataFrame): Unit = {
       require(key == "_pr_src", s"EdgeStage.append expects a _pr_src-keyed " +
         s"stage (got $key)")
-      val before = if (skel.isDefined) dataFiles() else Set.empty[String]
+      // the table's data files as its scan reads them: Spark's own
+      // listing skips `_`/`.` entries at every level, so an orphaned
+      // _temporary/ or .spark-staging-* tree from a crashed writer never
+      // enters the diff. Under the single-writer contract every
+      // append-only stage here carries, the before/after diff is exactly
+      // the appended delta.
+      val before =
+        if (skel.isDefined) edges.inputFiles.toSet else Set.empty[String]
       d.repartition(buckets, col(key)).write.mode("append")
         .bucketBy(buckets, key).sortBy(key)
         .format("parquet").saveAsTable(table)
+      // the append has committed: until the merge below succeeds the old
+      // skeleton is STALE over the larger edge table, so drop it first —
+      // any failure from here on leaves rankers on the full O(E)
+      // derivation, never on silently wrong ranks
+      val old = skel
+      skel = None
       // merge the delta's skeleton: node sets union, out-degrees add
       // (sum ignores nulls, all-null stays null — dangling stays
       // dangling), so the merged table is bit-identical to a full
@@ -229,18 +156,15 @@ object Graphs {
       // old skeleton's rows are pre-summed [[skeletonRows]]
       // contributions, so old rows ∪ delta endpoint rows → one `sum`
       // groupBy IS the merged skeleton (addition is associative, sum
-      // still ignores nulls). A failed merge must not leave a STALE
-      // skeleton over the larger edge table — reset to None (rankers
-      // fall back to the full O(E) derivation) before rethrowing.
-      skel.foreach { s =>
-        val newFiles = (dataFiles() -- before).toSeq
+      // still ignores nulls).
+      old.foreach { s =>
+        val newFiles = (edges.inputFiles.toSet -- before).toSeq
         // an empty delta wrote no files: the skeleton is already exact
-        if (newFiles.nonEmpty) {
-          skel = None
+        skel = if (newFiles.isEmpty) old else {
           val delta = spark.read.schema(
               org.apache.spark.sql.graftbridge.Bridge.asNullable(edges.schema))
             .parquet(newFiles: _*)
-          skel = Some(Dedup.stageAndRead(
+          Some(Stage.writeAndRead(
             s.unionByName(skeletonRows(delta, weighted))
               .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))))
         }
@@ -279,8 +203,7 @@ object Graphs {
     val st = stageProjectedEdges(
       edges.select(col(srcCol).cast("long").as("_pr_src"),
         col(dstCol).cast("long").as("_pr_dst")), "_pr_src")
-    if (!sys.env.get("SPARK_GRAFT_EDGESTAGE_SKEL").contains("off"))
-      st.initSkeleton()
+    st.initSkeleton()
     st
   }
 
@@ -292,8 +215,7 @@ object Graphs {
         col(dstCol).cast("long").as("_pr_dst"),
         col(weightCol).cast("long").as("_pr_w")), "_pr_src",
       weighted = true)
-    if (!sys.env.get("SPARK_GRAFT_EDGESTAGE_SKEL").contains("off"))
-      st.initSkeleton()
+    st.initSkeleton()
     st
   }
 
@@ -325,7 +247,7 @@ object Graphs {
     * out twice per round (dangling branch + contribution branch), so for
     * deep runs pass `stagePerIteration = true` to stage each round to a
     * unique temp parquet (JVM-exit cleanup, same contract as
-    * [[graft.ext.Dedup.stageSignatures]]) — constant plan size, each
+    * [[graft.stage.Stage.write]]) — constant plan size, each
     * round's rank table materialized exactly once. |V| is obtained with
     * one count() action up front (a single scalar, not a collect).
     *
@@ -381,7 +303,7 @@ object Graphs {
       // (node, outdeg-or-null): the per-round skeleton every rank table
       // rides on; null outdeg marks a dangling node
       val base0 = skeletonOf(e, weighted = false)
-      if (staged) Dedup.stageAndRead(base0) else base0
+      if (staged) Stage.writeAndRead(base0) else base0
     }
     val n = base.count()
     require(n > 0, "pageRank needs a non-empty graph")
@@ -399,7 +321,7 @@ object Graphs {
             .as("rank_q"))
     }
     if (staged && prior.isDefined)
-      ranks0 = Dedup.stageAndRead(ranks0)
+      ranks0 = Stage.writeAndRead(ranks0)
     prRounds(e, base, n, baseQ, d, iters, staged, ranks0, shjRanks)
   }
 
@@ -449,7 +371,7 @@ object Graphs {
                 * (coalesce(_pr_s, 0L) + _pr_dm div $n)) div 1000
               as bigint)""").as("rank_q"))
       if (stagePerIteration)
-        ranks = Dedup.stageAndRead(ranks)
+        ranks = Stage.writeAndRead(ranks)
     }
     ranks.select(col("node"), col("rank_q").as("rank_q18"))
   }
@@ -600,7 +522,7 @@ object Graphs {
     // EdgeStage caller passes its incrementally-maintained skeleton.
     val base = baseSkeleton.getOrElse {
       val base0 = skeletonOf(e, weighted = true)
-      if (staged) Dedup.stageAndRead(base0) else base0
+      if (staged) Stage.writeAndRead(base0) else base0
     }
     val n = base.count()
     require(n > 0, "pageRankWeighted needs a non-empty graph")
@@ -616,7 +538,7 @@ object Graphs {
             .as("rank_q"))
     }
     if (staged && prior.isDefined)
-      ranks = Dedup.stageAndRead(ranks)
+      ranks = Stage.writeAndRead(ranks)
     for (_ <- 1 to iters) {
       val dang = ranks.filter(col("_pr_od").isNull)
         .agg(coalesce(sum(col("rank_q")), lit(0L)).as("_pr_dm"))
@@ -638,7 +560,7 @@ object Graphs {
                 * (coalesce(_pr_s, 0L) + _pr_dm div $n)) div 1000
               as bigint)""").as("rank_q"))
       if (staged)
-        ranks = Dedup.stageAndRead(ranks)
+        ranks = Stage.writeAndRead(ranks)
     }
     ranks.select(col("node"), col("rank_q").as("rank_q18"))
   }
@@ -774,7 +696,7 @@ object Graphs {
     // (they absorb teleport mass) via a |V|-scale merge — never an O(E)
     // re-derivation.
     val base = baseSkeleton match {
-      case Some(sk) => Dedup.stageAndRead(
+      case Some(sk) => Stage.writeAndRead(
         sk.unionByName(seedNodes
             .select(col("node"), lit(null).cast("long").as("_pr_od")))
           .groupBy(col("node")).agg(sum(col("_pr_od")).as("_pr_od"))
@@ -796,7 +718,7 @@ object Graphs {
             Seq("node"), "left")
           .select(col("node"), col("_pr_od"),
             coalesce(col("_pr_seed"), lit(false)).as("_pr_seed"))
-        if (staged) Dedup.stageAndRead(base0) else base0
+        if (staged) Stage.writeAndRead(base0) else base0
     }
     val nSeeds = seedNodes.count()
     require(nSeeds > 0, "trustRank needs a non-empty seed set")
@@ -813,7 +735,7 @@ object Graphs {
             expr(s"cast(if(_pr_seed, $baseQ, 0) as bigint)")).as("rank_q"))
     }
     if (staged && prior.isDefined)
-      ranks = Dedup.stageAndRead(ranks)
+      ranks = Stage.writeAndRead(ranks)
     for (_ <- 1 to iters) {
       val dang = ranks.filter(col("_pr_od").isNull)
         .agg(coalesce(sum(col("rank_q")), lit(0L)).as("_pr_dm"))
@@ -829,7 +751,7 @@ object Graphs {
                    + if(_pr_seed, _pr_dm div $nSeeds, 0L))) div 1000
               as bigint)""").as("rank_q"))
       if (staged)
-        ranks = Dedup.stageAndRead(ranks)
+        ranks = Stage.writeAndRead(ranks)
     }
     ranks.select(col("node"), col("rank_q").as("rank_q18"))
   }
@@ -943,7 +865,7 @@ object Graphs {
     // round re-executes the caller's edge-build lineage several times.
     // HITS joins the edge list on BOTH ends (src for the authority
     // half-step, dst for the hub half-step). Staged layout (r17 A/B,
-    // tools/HitsAb, measured both ways at 100×): ONE src-bucketed copy;
+    // measured both ways at 100×; PERF.md "HITS layout A/B"): ONE src-bucketed copy;
     // the authority half-step rides the bucket (no edge-side Exchange
     // or Sort), and the hub half-step joins the SAME copy on _ht_dst
     // with the |V|-row score table as the shuffled-hash BUILD side —
@@ -966,7 +888,7 @@ object Graphs {
         .union(eBySrc.select(col("_ht_dst").as("node"))).distinct()
       val nodes =
         if (stagePerIteration)
-          Dedup.stageAndRead(nodes0)
+          Stage.writeAndRead(nodes0)
         else nodes0
       require(eBySrc.limit(1).count() > 0, "hits needs a non-empty edge list")
 
@@ -1000,8 +922,8 @@ object Graphs {
           // stage BOTH frames: the final select consumes auth too, and
           // a lazy auth would re-run its half-step (incl. the edge
           // join) after the tables drop in finally
-          auth = Dedup.stageAndRead(auth)
-          hub = Dedup.stageAndRead(hub)
+          auth = Stage.writeAndRead(auth)
+          hub = Stage.writeAndRead(hub)
         }
       }
       // hub and auth both descend from `nodes` — rename one join key so
@@ -1028,7 +950,7 @@ object Graphs {
     * edge, both ways — built once, staged) is filtered to
     * both-endpoints-alive by two node-keyed joins, then one
     * map-side-combining degree count; the survivor set stages per
-    * round ([[Dedup.stageSignatures]] — constant plan size), and the
+    * round ([[graft.stage.Stage.write]] — constant plan size), and the
     * ONLY driver scalar is the per-round survivor count backing the
     * convergence test (the pageRank |V| discipline). Ids only on every
     * exchange.
@@ -1039,66 +961,43 @@ object Graphs {
             maxRounds: Int = 32): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1: $maxRounds")
-    val spark = edges.sparkSession
     val und = edges
       .select(least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("_kc_u"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("_kc_v"))
       .filter(col("_kc_u") =!= col("_kc_v"))
       .distinct()
-    // Adjacency stage form, MEASURED both ways at both scales (r18,
-    // PERF.md): the pageRank/HITS bucketed-stage discipline (one sorted
-    // file per bucket, each round's alive join edge-Exchange-free) was
-    // tried here and LOSES on this operator's regime — interleaved A/B:
-    // sf0.1 10.6 vs 5.4 s, 100× min-of-2 14.7 vs 11.9 s / 11.8 vs
-    // 9.0 GB heap — because the co-purchase adjacency is SPARSE: the
-    // alive side broadcasts even at 100×, so no round pays an edge
-    // exchange the bucketing could remove, and the sorted bucketed
-    // write plus 32-task bucket scans per round are pure overhead
-    // (guide §1.1: the "ideal" plan lost to the measurement; §2.4's
-    // shuffle removal has nothing to remove here). FLAT stage is the
-    // measured default; SPARK_GRAFT_KCORE_BUCKET=on opts into the
-    // bucketed form for graphs dense enough that the alive set cannot
-    // broadcast and rounds are many.
     val adjacency = und
       .select(col("_kc_u").as("_kc_a"), col("_kc_v").as("_kc_b"))
       .unionAll(und.select(col("_kc_v").as("_kc_a"),
         col("_kc_u").as("_kc_b")))
-    val (ee, dropEe) =
-      if (sys.env.get("SPARK_GRAFT_KCORE_BUCKET").contains("on"))
-        stageEdgesBucketedOn(adjacency, "_kc_b")
-      else (Dedup.stageAndRead(adjacency), () => ())
-    try {
-      var alive = ee.select(col("_kc_a").as("node")).distinct()
-      var n = alive.count()
-      var result: DataFrame = null
-      var r = 0
-      while (result == null && r < maxRounds) {
-        r += 1
-        // ONE alive-join per round, not two: restricting the a-side to
-        // alive nodes is redundant — peeling is monotone (alive sets only
-        // shrink), so a node removed in an earlier round has degree < k
-        // over ANY later alive set and the `deg >= k` filter drops it
-        // anyway. Each round therefore joins the staged edge table once
-        // (b-side alive semi-filter) instead of twice — half the per-round
-        // join work at every scale, identical survivor set per round.
-        val deg = ee
-          .join(alive.select(col("node").as("_kc_b")), "_kc_b")
-          .groupBy(col("_kc_a").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k)
-        val next = Dedup.stageAndRead(deg)
-        val m = next.count()
-        if (m == n) result = next.select(col("node"), col("deg"))
-        else { n = m; alive = next.select(col("node")) }
-      }
-      if (result == null) throw new IllegalStateException(
-        s"kCore did not reach a fixpoint in $maxRounds rounds — raise " +
-          "maxRounds (and the oracle unroll) for this graph")
-      // the result frame reads from per-round stage dirs, not the edge
-      // table — materialized by the count above, so dropping ee in
-      // finally is safe for every consumer of the returned frame
-      result
-    } finally dropEe()
+    val ee = Stage.writeAndRead(adjacency)
+    var alive = ee.select(col("_kc_a").as("node")).distinct()
+    var n = alive.count()
+    var result: DataFrame = null
+    var r = 0
+    while (result == null && r < maxRounds) {
+      r += 1
+      // ONE alive-join per round, not two: restricting the a-side to
+      // alive nodes is redundant — peeling is monotone (alive sets only
+      // shrink), so a node removed in an earlier round has degree < k
+      // over ANY later alive set and the `deg >= k` filter drops it
+      // anyway. Each round therefore joins the staged edge table once
+      // (b-side alive semi-filter) instead of twice — half the per-round
+      // join work at every scale, identical survivor set per round.
+      val deg = ee
+        .join(alive.select(col("node").as("_kc_b")), "_kc_b")
+        .groupBy(col("_kc_a").as("node"))
+        .agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k)
+      val next = Stage.writeAndRead(deg)
+      val m = next.count()
+      if (m == n) result = next.select(col("node"), col("deg"))
+      else { n = m; alive = next.select(col("node")) }
+    }
+    if (result == null) throw new IllegalStateException(
+      s"kCore did not reach a fixpoint in $maxRounds rounds — raise " +
+        "maxRounds (and the oracle unroll) for this graph")
+    result
   }
 
   /** TRIANGLE COUNTING + local clustering coefficient by DEGREE-ORDERED

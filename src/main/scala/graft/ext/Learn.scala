@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.stage.Stage
 
 /** In-engine supervised training for the corpus-quality models the
   * curation layer consumes. [[graft.ext.TextStats.hashedLinearScoreQ30]]
@@ -87,7 +88,7 @@ object Learn {
     * epoch in SQL and must agree weight-for-weight.
     *
     * `stageFeatures` writes the feature table to a managed stage first
-    * (Dedup.stageSignatures: temp dir + shutdown-hook cleanup) so the
+    * ([[graft.stage.Stage]]: temp dir + drain/JVM-exit cleanup) so the
     * per-epoch passes re-read a narrow parquet instead of re-scanning
     * text — the x35 `stagePerIteration` discipline. */
   def perceptronTrain(df: DataFrame, textCol: String, idCol: String,
@@ -97,7 +98,7 @@ object Learn {
     val feat0 = hashedTokenFeatures(df, textCol, idCol, labelCol, nBuckets)
     val feat =
       if (stageFeatures)
-        Dedup.stageAndRead(feat0)
+        Stage.writeAndRead(feat0)
       else feat0
     // label contract ±1 exactly (see centroidThresholdTrain): one cheap
     // bounded job against the feature table before the epochs start
@@ -1329,11 +1330,11 @@ object Learn {
     // stage the trained artifact (default): the weight table is tiny
     // (≤ nBuckets rows) but its LINEAGE is a full corpus pass — staging
     // makes the sweep's jobs and every deployment read a flat ≤nBuckets-
-    // row parquet instead of re-training per job (the stageSignatures /
+    // row parquet instead of re-training per job (the graft.stage.Stage /
     // x35 stagePerIteration contract: temp dir, JVM-exit cleanup)
     val weights =
       if (stageWeights)
-        Dedup.stageAndRead(weights0)
+        Stage.writeAndRead(weights0)
       else weights0
     // training scores via the SAME broadcast-join scorer deployment
     // uses; the sweep is the shared census-bounded step

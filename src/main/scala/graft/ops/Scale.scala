@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.stage.Stage
 
 /** Skew and co-location tools for the 100 TB posture (SURVEY.md §7.1).
   *
@@ -130,17 +131,7 @@ object Scale {
     // LOCATION_ALREADY_EXISTS even in overwrite mode — drop the entry and
     // clear any orphaned location first
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val root = if (warehouse.startsWith("file:")) new java.io.File(new java.net.URI(warehouse))
-               else new java.io.File(warehouse)
-    val loc = new java.io.File(root, table)
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(loc)
-    }
+    Stage.delete(new java.io.File(Stage.warehouseDir(spark), table).toPath)
     // ONE file per bucket: the writer emits a file per (task, bucket)
     // pair, and a bucketed scan only reports its sortBy order when every
     // bucket holds a single file — multiple files would interleave. With
@@ -233,17 +224,6 @@ object Scale {
       .sortWithinPartitions(col("_z"))
       .drop("_z")
       .write.mode("overwrite").parquet(path)
-  }
-
-  /** Unique temp directory for a written layout, registered in the shared
-    * staging-dir registry (Dedup) — deleted at JVM exit, or earlier by the
-    * Bench/Verify per-query `drainStageDirs()` hygiene so a long catalog
-    * session doesn't accumulate dozens of layouts' disk + page-cache
-    * pressure (the round-11 bench-tail amplification). */
-  def tempLayoutDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    graft.ext.Dedup.registerStageDirForCleanup(dir.toString)
-    dir.toString
   }
 
   /** Per-file skipping manifest for a parquet directory: one row per data

@@ -63,9 +63,7 @@ object JobProfile {
         val gapStr = if (gap >= 0.05) f"  gap=$gap%5.2f s" else ""
         println(f"  job $id%3d  $sec%6.2f s$gapStr  $site")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      graft.ext.Dedup.drainStageDirs()
+      graft.stage.Stage.release(spark)
       System.gc()
     }
     spark.stop()

@@ -37,7 +37,7 @@ object PlanDump {
         java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
       println(s"[plandump] wrote $outDir/${name}_$suffix.txt " +
         s"(${plan.count(_ == '\n')} lines)")
-      graft.ext.Dedup.drainStageDirs()
+      graft.stage.Stage.release(spark)
     }
     spark.stop()
   }

@@ -170,11 +170,7 @@ object ScaleRehearsal {
       val p = new java.io.File(path)
       if (!p.exists()) {
         val tmp = new java.io.File(path + ".tmp")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        if (tmp.exists()) rm(tmp)
+        graft.stage.Stage.delete(tmp.toPath)
         df.write.mode("overwrite").parquet(tmp.getPath)
         require(tmp.renameTo(p), s"rename ${tmp.getPath} -> $path failed")
       }
@@ -340,9 +336,7 @@ object ScaleRehearsal {
         .count()
       val dt = (System.nanoTime() - t0) / 1e9
       val hm = heapMb()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      graft.ext.Dedup.drainStageDirs()
+      graft.stage.Stage.release(spark)
       System.gc()
       println(f"[rehearsal] $name $dir rows=$n ${dt}%.2fs heap=${hm}MB")
       (dt, hm)

@@ -405,7 +405,7 @@ class PlanSpec extends SparkSpec {
   test("incremental span stats broadcast the batch digests; the staged corpus never shuffle-joins") {
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val stage = graft.ext.Dedup.stageSignatures(
+    val stage = graft.stage.Stage.write(
       graft.ext.Dedup.spanHashes(docs.filter(col("doc_id") % 5 =!= 0),
         "text", "doc_id", 5))
     val stats = graft.ext.Dedup.repeatedSpanStatsIncremental(
@@ -426,7 +426,7 @@ class PlanSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val cents = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cvec"))
-    val stage = graft.ext.Dedup.stageSignatures(
+    val stage = graft.stage.Stage.write(
       graft.ext.Similarity.semDedupAssign(emb.filter(col("vec_id") % 5 =!= 0),
         cents, "vec_id", "embedding"))
     val pairs = graft.ext.Similarity.semDedupPairsIncremental(

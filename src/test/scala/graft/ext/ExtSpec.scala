@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.stage.Stage
 
 class ExtSpec extends SparkSpec {
   import spark.implicits._
@@ -1291,8 +1292,8 @@ class ExtSpec extends SparkSpec {
     val newIds = Set(2L, 4L)
     val sigOld = sigAll.filter(!col("doc_id").isin(newIds.toSeq: _*))
     val sigNew = sigAll.filter(col("doc_id").isin(newIds.toSeq: _*))
-    val stage = Dedup.stageSignatures(sigOld)
-    assert(Dedup.registeredStageDirs.contains(stage)) // JVM-exit cleaned
+    val stage = Stage.write(sigOld)
+    assert(Stage.registered.contains(stage)) // JVM-exit cleaned
     val inc = Dedup.lshCandidatePairsIncremental(sigNew, stage, "doc_id", 8, 2)
       .as[(Long, Long)].collect().toSet
     // oracle: the full self-join restricted to pairs with >= 1 new side
@@ -1305,10 +1306,10 @@ class ExtSpec extends SparkSpec {
 
   test("lshCandidatePairsStaged no-path overload registers its temp dir for JVM-exit cleanup") {
     val sig = Dedup.minhashSignature(docs, "text", 8)
-    val before = Dedup.registeredStageDirs
+    val before = Stage.registered
     val staged = Dedup.lshCandidatePairsStaged(sig, "doc_id", 8, 2)
     assert(staged.count() > 0)
-    val added = Dedup.registeredStageDirs -- before
+    val added = Stage.registered -- before
     assert(added.size == 1, s"expected exactly one new staging dir, got $added")
     val dir = java.nio.file.Paths.get(added.head)
     assert(java.nio.file.Files.exists(dir), s"staging dir missing: $dir")
@@ -1562,7 +1563,7 @@ class ExtSpec extends SparkSpec {
     // a C4-style dedup targets. (Word-token Jaccard is NOT that measure:
     // it saturates on same-domain template text — 73% of all fixture
     // pairs clear token-j 0.5 — so judging shingle-LSH by it is a
-    // category error; tools/LshRecall measures both.) At (k=4, r=2, b=2)
+    // category error; SURVEY.md's "LSH QUALITY pin" records both.) At (k=4, r=2, b=2)
     // theory gives P(candidate) = 1-(1-j²)² ≥ 0.44 at shingle-j 0.5
     // rising to ~1 near j=1; the fixture's true pairs are all high-j and
     // measured recall is 1.0 (28/28) — pinned at ≥ 0.95 with the verify
@@ -1588,7 +1589,7 @@ class ExtSpec extends SparkSpec {
   test("ANN recall@5 vs brute force: IVF stays high, nProbe is monotone, training never hurts") {
     // QUALITY pin, not just determinism: the approximate paths must stay
     // close to exact top-k on the fixture (bounds measured via
-    // tools/RecallProbe; the fixture's near-uniform synthetic vectors are
+    // a recall probe, SURVEY.md "ANN QUALITY pins"; the fixture's near-uniform synthetic vectors are
     // PQ's worst case — 4×16-dim subspaces to 16 entries is very coarse
     // there, so its honest bound is low while IVF's is high)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2146,7 +2147,7 @@ class ExtSpec extends SparkSpec {
       (10L, "m u v w x y z n"),
       (14L, "a1 a2 a3 a4 a5 G2 H b1 b2 b3 b4 b5")
     ).toDF("doc_id", "text")
-    val stage = Dedup.stageSignatures(
+    val stage = Stage.write(
       Dedup.spanHashes(base, "text", "doc_id", 5))
     val got = Dedup.sharedSpansExactIncremental(batch, base, stage,
         "text", "doc_id", 5)
@@ -2337,7 +2338,7 @@ class ExtSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSet
     assert(oneShot.exists(p => !isNew(p._1) && isNew(p._2)),
       "fixture must have cross-batch overlap")
-    val stage = Dedup.stageSignatures(Dedup.chunkSignatures(
+    val stage = Stage.write(Dedup.chunkSignatures(
       corpus.filter(col("doc_id") < 10), "text", "doc_id", 60, 4))
     val inc = Dedup.chunkNearDupPairsIncremental(
       corpus.filter(col("doc_id") >= 10), stage, "text", "doc_id", 60, 4, 2)

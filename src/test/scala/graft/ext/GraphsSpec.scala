@@ -618,6 +618,54 @@ class GraphsSpec extends SparkSpec {
     } finally st.drop()
   }
 
+  test("EdgeStage append: orphaned _/. trees in the table dir never enter the skeleton diff") {
+    // complete parquet files can sit under `_…/` or `.spark-staging-*/`
+    // inside the table directory (a crashed writer's leftovers); the
+    // table scan skips them, so the append's before/after file diff must
+    // too — read as delta files, their rows would be merged into the
+    // skeleton. The delta's own evaluation plants them, so they appear
+    // INSIDE the append window, between the two listings.
+    val resident = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+    val delta = Seq((5L, 1L), (4L, 2L))
+    val full = resident ++ delta
+    val st = Graphs.stageEdgeTable(resident.toDF("src", "dst"), "src", "dst")
+    try {
+      val dir = new java.io.File(
+        graft.stage.Stage.warehouseDir(spark), st.table).toPath
+      val listing = java.nio.file.Files.list(dir)
+      val part = try listing.filter(_.getFileName.toString.endsWith(".parquet"))
+        .findFirst().get finally listing.close()
+      val src = part.toString
+      val dsts = Seq("_crashed/0", ".spark-staging-1")
+        .map(sub => dir.resolve(sub).resolve(part.getFileName).toString)
+      val plant = udf { (x: Long) =>
+        dsts.foreach { d =>
+          val t = java.nio.file.Paths.get(d)
+          java.nio.file.Files.createDirectories(t.getParent)
+          try java.nio.file.Files.copy(java.nio.file.Paths.get(src), t)
+          catch { case _: java.nio.file.FileAlreadyExistsException => () }
+        }
+        x
+      }
+      st.append(delta.toDF("src", "dst").select(plant(col("src")).as("src"),
+        col("dst")), "src", "dst")
+      assert(dsts.forall(d => java.nio.file.Files.exists(java.nio.file.Paths.get(d))))
+      assert(st.edges.count() == full.size)
+      val wantOd = full.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      val want = (full.map(_._1) ++ full.map(_._2)).distinct
+        .map(n => n -> wantOd.get(n)).toMap
+      val got = st.skeletonOpt.get.collect()
+        .map(r => r.getLong(0) ->
+          (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+      assert(got == want)
+      val prior = run(resident, 3)
+      val warm = Graphs.pageRankWarmStaged(st, 2,
+          prior.toSeq.toDF("node", "rank_q18"))
+        .as[(Long, Long)].collect().toMap
+      assert(warm == runWarm(full, prior, 2))
+    } finally st.drop()
+  }
+
   test("EdgeStage: appended (multi-file-bucket) table keeps the round join edge-Exchange- and Sort-free") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
